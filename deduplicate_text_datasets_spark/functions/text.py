@@ -9,6 +9,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from .. import worker_kernel
+
 TOKEN_SPLIT_RE = "[^a-z0-9]+"
 
 
@@ -109,6 +111,7 @@ def make_tokenizer_udf(batch_fn):
     from pyspark.sql import types as T
 
     @F.pandas_udf(T.ArrayType(T.IntegerType()))
+    @worker_kernel
     def _tok(texts):
         return batch_fn(texts)
 
@@ -155,6 +158,7 @@ def tokenize_corpus(
     ids = tokenizer(F.col(text_col)) if tokenizer is not None else token_ids_u16(text_col)
 
     @F.pandas_udf(T.BinaryType())
+    @worker_kernel
     def _pack(id_lists):
         def pack_one(a):
             arr = np.asarray(a if a is not None else [], dtype=np.int64)

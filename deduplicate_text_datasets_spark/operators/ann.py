@@ -29,6 +29,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .. import worker_kernel
 from ..config import ANN_SEED
 
 
@@ -109,7 +110,7 @@ def cosine_topk(
 
     def kernel(batches) -> "Iterator[pd.DataFrame]":
         for pdf in batches:
-            if not len(pdf):
+            if not len(pdf) or not qids:  # no scores to emit
                 continue
             ids = pdf["neighbor_id"].to_numpy(np.int64)
             m = np.stack(
@@ -152,7 +153,7 @@ def cosine_topk(
                 }
             )
 
-    scored = emb_sel.mapInPandas(kernel, schema).filter(
+    scored = emb_sel.mapInPandas(worker_kernel(kernel), schema).filter(
         F.col("query_id") != F.col("neighbor_id")
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -196,7 +197,9 @@ def hyperplane_buckets(
                 }
             )
 
-    return emb.select("vec_id", vec_col).mapInPandas(kernel, HYPERPLANE_SCHEMA)
+    return emb.select("vec_id", vec_col).mapInPandas(
+        worker_kernel(kernel), HYPERPLANE_SCHEMA
+    )
 
 
 def cosine_topk_lsh(
@@ -300,7 +303,7 @@ def hyperplane_bands(
                 }
             )
 
-    return emb.select("vec_id", vec_col).mapInPandas(kernel, BAND_SCHEMA)
+    return emb.select("vec_id", vec_col).mapInPandas(worker_kernel(kernel), BAND_SCHEMA)
 
 
 def cosine_pairs(
@@ -512,7 +515,9 @@ def ivf_assign(
                 }
             )
 
-    return emb.select("vec_id", vec_col).mapInPandas(kernel, IVF_ASSIGN_SCHEMA)
+    return emb.select("vec_id", vec_col).mapInPandas(
+        worker_kernel(kernel), IVF_ASSIGN_SCHEMA
+    )
 
 
 def _probe_lists(
@@ -550,7 +555,7 @@ def _probe_lists(
             )
 
     return queries.select(F.col("query_id"), F.col(vec_col)).mapInPandas(
-        kernel, schema
+        worker_kernel(kernel), schema
     )
 
 

@@ -144,8 +144,9 @@ def connected_components(
                 F.least("src", "dst").alias("v"),
             )
         )
-        # count+collect probe (plans.caching.probe_rows): no CollectLimit
-        # escalation ladder, nothing shipped when the frame is over-guard
+        # single-collect probe (plans.caching.probe_rows): no CollectLimit
+        # escalation ladder; an over-guard frame is still shipped whole
+        # (up to maxResultSize) before it is discarded
         pdf = probe_rows(raw, driver_max_edges)
         if pdf is not None:
             if len(pdf) == 0:

@@ -18,6 +18,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .. import worker_kernel
+
 RANGE_SCHEMA = T.StructType(
     [
         T.StructField("start", T.LongType(), False),
@@ -68,8 +70,9 @@ def coalesce_positions(positions: DataFrame, length: int) -> DataFrame:
     )
     if driver_max > 0:
         pos_p = scoped_persist(pos_narrow)
-        # count+collect probe (plans.caching.probe_rows): no CollectLimit
-        # escalation ladder, nothing shipped when the frame is over-guard
+        # single-collect probe (plans.caching.probe_rows): no CollectLimit
+        # escalation ladder; an over-guard frame is still shipped whole
+        # (up to maxResultSize) before it is discarded
         pdf = probe_rows(pos_p, driver_max)
         if pdf is not None:
             arr = np.sort(pdf["pos"].to_numpy(np.int64))
@@ -100,7 +103,7 @@ def coalesce_positions(positions: DataFrame, length: int) -> DataFrame:
         ranges = _fold_positions(np.concatenate(chunks), length)
         yield pd.DataFrame({"start": ranges[:, 0], "end": ranges[:, 1]})
 
-    local = parts.mapInPandas(fold, RANGE_SCHEMA)
+    local = parts.mapInPandas(worker_kernel(fold), RANGE_SCHEMA)
     return _merge_sorted_partitions(local, adjacency=True, gap=0)
 
 
@@ -191,7 +194,7 @@ def _merge_sorted_partitions(
 
     from ..plans.caching import probe_rows, scoped_persist
 
-    p = scoped_persist(ranges.mapInPandas(local, merged_schema))
+    p = scoped_persist(ranges.mapInPandas(worker_kernel(local), merged_schema))
     # Size-adaptive seam merge: the locally-merged frame is one row per
     # locally-MAXIMAL range, already orders of magnitude smaller than the
     # input positions. At or below the guard (env

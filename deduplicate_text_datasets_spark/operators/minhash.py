@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .. import worker_kernel
 from ..config import MINHASH_SEED, MinHashConfig
 from ..functions.text import tokens
 
@@ -126,7 +127,7 @@ def minhash_signatures(shingled: DataFrame, cfg: MinHashConfig) -> DataFrame:
                 {"doc_id": pdf["doc_id"].to_numpy(), "sig": list(sigs)}
             )
 
-    return shingled.mapInPandas(kernel, SIGNATURE_SCHEMA)
+    return shingled.mapInPandas(worker_kernel(kernel), SIGNATURE_SCHEMA)
 
 
 def lsh_buckets(signatures: DataFrame, cfg: MinHashConfig) -> DataFrame:
@@ -180,6 +181,7 @@ def candidate_pairs(
     pair_cap = int(
         os.environ.get("SPARK_GRAFT_LSH_DRIVER_PAIR_MAX", str(1 << 22))
     )
+    raw = None
     if driver_max > 0:
         raw = scoped_persist(buckets)
         pdf = probe_rows(raw, driver_max)
@@ -233,6 +235,10 @@ def candidate_pairs(
     has_hot = bool(
         sizes.filter(F.col("bsize") > cfg.max_bucket_size).limit(1).count()
     )
+    if raw is not None and raw is not buckets:
+        # the probe's size agg filled the copartitioned copy: release the
+        # probe-time copy instead of keeping the bucket frame cached twice
+        raw.unpersist(blocking=False)
     if not has_hot:
         return pairs.distinct()
     hot = buckets.join(

@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .. import worker_kernel
+
 MEDIA_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType(), False),
@@ -113,7 +115,7 @@ def extract_features(
             )
 
     return media.select("doc_id", "media_type", "payload").mapInPandas(
-        kernel, FEATURE_SCHEMA
+        worker_kernel(kernel), FEATURE_SCHEMA
     )
 
 
@@ -141,7 +143,9 @@ def frame_sample(
             if rows:
                 yield pd.DataFrame(rows, columns=["doc_id", "frame_id", "frame"])
 
-    return media.select("doc_id", "payload").mapInPandas(kernel, out_schema)
+    return media.select("doc_id", "payload").mapInPandas(
+        worker_kernel(kernel), out_schema
+    )
 
 
 def exact_media_duplicates(media: DataFrame) -> DataFrame:

@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .. import worker_kernel
 from ..config import ExactSubstrConfig
 from ..sources.corpus import (
     assemble_shard_buffer,
@@ -54,6 +55,7 @@ from .suffix import (
     QUERY_HITS_SCHEMA,
     _batched_match_lens,
     _sa_range,
+    _sum_hits,
     suffix_array,
 )
 
@@ -177,7 +179,7 @@ def build_suffix_index(
     shards = assign_shards(docs, cfg.shard_bytes, cfg.overlap_bytes)
     proj = shards.select("shard_id", "doc_id", "byte_start", "text")
     return _shards_one_per_task(proj, total, cfg.shard_bytes).mapInPandas(
-        kernel, SA_INDEX_SCHEMA
+        worker_kernel(kernel), SA_INDEX_SCHEMA
     )
 
 
@@ -241,27 +243,10 @@ def count_occurrences_indexed(
                     continue
                 rows.append((qid, int(len(owned)), int(owned.min())))
         out = pd.DataFrame(rows, columns=["query_id", "cnt", "first_pos"])
-        yield out.astype({"query_id": "int64", "cnt": "int64"})
+        yield out.astype({"query_id": "int64", "cnt": "int64", "first_pos": "int64"})
 
-    # baseline (qid, 0, null) rows ride the same aggregation as a local
-    # relation: every query reaches the groupBy even with zero hits, so
-    # the result needs no left join back against a query frame (round-6 —
-    # one broadcast join less per call; sum/min treat them as identity)
-    spark = index.sparkSession
-    baseline = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "query_id": np.array([qid for qid, _ in qarr], np.int64),
-                "cnt": np.zeros(len(qarr), np.int64),
-                "first_pos": pd.array([None] * len(qarr), dtype="Int64"),
-            }
-        ),
-        QUERY_HITS_SCHEMA,
-    )  # pandas input -> local relation (a list parallelizes into RDD slices)
-    hits = index.mapInPandas(kernel, QUERY_HITS_SCHEMA)
-    return hits.unionByName(baseline).groupBy("query_id").agg(
-        F.sum("cnt").alias("count"), F.min("first_pos").alias("first_pos")
-    )
+    hits = index.mapInPandas(worker_kernel(kernel), QUERY_HITS_SCHEMA)
+    return _sum_hits(hits, [qid for qid, _ in qarr])
 
 
 def find_positions_indexed(
@@ -288,7 +273,7 @@ def find_positions_indexed(
             {"query_id": "int64", "pos": "int64"}
         )
 
-    return index.mapInPandas(kernel, POSITIONS_SCHEMA)
+    return index.mapInPandas(worker_kernel(kernel), POSITIONS_SCHEMA)
 
 
 def find_training_data_indexed(
@@ -326,7 +311,7 @@ def find_training_data_indexed(
                 {"query_id": [], "qpos": [], "match_len": []}
             ).astype({"query_id": "int64", "qpos": "int64", "match_len": "int64"})
 
-    per_shard = index.mapInPandas(kernel, MATCH_LEN_SCHEMA)
+    per_shard = index.mapInPandas(worker_kernel(kernel), MATCH_LEN_SCHEMA)
     return per_shard.groupBy("query_id", "qpos").agg(
         F.max("match_len").alias("match_len")
     )

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .. import worker_kernel
 from ..config import SimHashConfig
 from ..functions.text import tokens
 
@@ -69,7 +70,7 @@ def simhash_fingerprints(docs: DataFrame, text_col: str = "text") -> DataFrame:
                 }
             )
 
-    return hashed.mapInPandas(kernel, FINGERPRINT_SCHEMA)
+    return hashed.mapInPandas(worker_kernel(kernel), FINGERPRINT_SCHEMA)
 
 
 def _blocks(cfg: SimHashConfig) -> list[tuple[int, int]]:

@@ -33,6 +33,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
+from .. import worker_kernel
+
 _U64 = np.uint64
 _SM_GOLD = _U64(0x9E3779B97F4A7C15)
 _SM_M1 = _U64(0xBF58476D1CE4E5B9)
@@ -165,13 +167,13 @@ def build_bloom_sketch(
     from pyspark.sql import functions as F
 
     positions = keys_df.select(F.col("k")).mapInPandas(
-        emit_positions, POSITION_SCHEMA
+        worker_kernel(emit_positions), POSITION_SCHEMA
     )
     # logical (unsigned) shift: bitpos is a uint64 bit index viewed int64,
     # so the group key must match build_slice's `pos >> slice_log2`
     slices = positions.groupBy(
         F.shiftrightunsigned(F.col("bitpos"), slice_log2).alias("gslice")
-    ).applyInPandas(lambda _k, pdf: build_slice(pdf), SLICE_SCHEMA)
+    ).applyInPandas(worker_kernel(build_slice), SLICE_SCHEMA)
     bits = np.zeros(m_bits // 8, np.uint8)
     for row in slices.collect():
         off = row["slice_id"] * slice_bytes

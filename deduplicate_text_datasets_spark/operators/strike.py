@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .. import worker_kernel
 from ..config import SEP_BYTES, ExactSubstrConfig
 from .intervals import interval_join
 
@@ -174,9 +175,12 @@ def apply_removals(
     if fast is not None:
         import os
 
+        from ..plans.caching import scoped_broadcast
+
         t_ids, t_a, t_b, t_off = fast
         spark = docs_with_offsets.sparkSession
-        bc = spark.sparkContext.broadcast((t_ids, t_a, t_b, t_off))
+        # destroyed when the caller's cache_scope exits
+        bc = scoped_broadcast(spark.sparkContext, (t_ids, t_a, t_b, t_off))
         # Single-pass variant: when the whole corpus is small (total-bytes
         # memo under the guard), ship EVERY doc through one splice kernel
         # — untouched rows pass through byte-unchanged — instead of the
@@ -217,7 +221,7 @@ def apply_removals(
                         out, columns=["doc_id", "url", "deduped"]
                     )
 
-            return docs.mapInPandas(splice_all, STRIKE_SCHEMA)
+            return docs.mapInPandas(worker_kernel(splice_all), STRIKE_SCHEMA)
 
         ids_df = F.broadcast(
             spark.createDataFrame(
@@ -249,7 +253,7 @@ def apply_removals(
                 yield pd.DataFrame(out, columns=["doc_id", "url", "deduped"])
 
         struck = docs.join(ids_df, "doc_id").mapInPandas(
-            splice_bc, STRIKE_SCHEMA
+            worker_kernel(splice_bc), STRIKE_SCHEMA
         )
         untouched = docs.join(ids_df, "doc_id", "left_anti").select(
             "doc_id",
@@ -297,7 +301,7 @@ def apply_removals(
                 out.append((int(doc_id), url, raw))
             yield pd.DataFrame(out, columns=["doc_id", "url", "deduped"])
 
-    struck = touched.mapInPandas(splice, STRIKE_SCHEMA)
+    struck = touched.mapInPandas(worker_kernel(splice), STRIKE_SCHEMA)
     untouched = docs.join(spans.select("doc_id"), "doc_id", "left_anti").select(
         "doc_id",
         "url",

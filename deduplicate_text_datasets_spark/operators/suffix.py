@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .. import worker_kernel
 from ..config import ROLLHASH_X1, ROLLHASH_X2, ExactSubstrConfig
 from ..sources.corpus import (
     assemble_shard_buffer,
@@ -285,9 +286,9 @@ def _apply_shard_kernel(
     """
     proj = shards.select("shard_id", "doc_id", "byte_start", "text")
     if os.environ.get("SPARK_GRAFT_SHARD_LAYOUT", "range") == "groupby":
-        return proj.groupBy("shard_id").applyInPandas(kernel, schema)
+        return proj.groupBy("shard_id").applyInPandas(worker_kernel(kernel), schema)
     return _shards_one_per_task(proj, total, shard_bytes).mapInPandas(
-        kernel, schema
+        worker_kernel(kernel), schema
     )
 
 
@@ -527,7 +528,7 @@ def find_duplicates_mappass(
             if len(out):
                 yield from _emit_chunks(out)
 
-    return clustered.mapInPandas(kernel, DUPLICATES_SCHEMA)
+    return clustered.mapInPandas(worker_kernel(kernel), DUPLICATES_SCHEMA)
 
 
 def _prefilter_sketch_bc(
@@ -799,7 +800,7 @@ def cluster_samples(
             "start", "end", "cluster_size", "doc_id", "byte_start", "text"
         )
         .groupBy("start")
-        .applyInPandas(lambda pdf: assemble(pdf), CLUSTER_SAMPLE_SCHEMA)
+        .applyInPandas(worker_kernel(assemble), CLUSTER_SAMPLE_SCHEMA)
     )
 
 
@@ -1081,22 +1082,29 @@ def count_occurrences(
     hits = (
         shards.select("shard_id", "doc_id", "byte_start", "text")
         .groupBy("shard_id")
-        .applyInPandas(kernel, QUERY_HITS_SCHEMA)
+        .applyInPandas(worker_kernel(kernel), QUERY_HITS_SCHEMA)
     )
-    # baseline (qid, 0, null) rows ride the same aggregation as a local
-    # relation so absent queries report 0 without a left join back against
-    # a query frame (round-6 — one broadcast join less per call)
-    spark = docs.sparkSession
-    baseline = spark.createDataFrame(
+    return _sum_hits(hits, [qid for qid, _ in queries])
+
+
+def _sum_hits(hits: DataFrame, query_ids: list[int]) -> DataFrame:
+    """(query_id, cnt, first_pos) hits -> (query_id, count, first_pos),
+    one row per query id.
+
+    Baseline (qid, 0, null) rows ride the same aggregation as a local
+    relation, so absent queries report 0 without a left join back against
+    a query frame (sum/min treat them as identity). The null ``first_pos``
+    is a Spark literal, not a pandas column: a nullable pandas ``Int64``
+    column converts only on the Arrow path of ``createDataFrame``."""
+    baseline = hits.sparkSession.createDataFrame(
         pd.DataFrame(
             {
-                "query_id": np.array([qid for qid, _ in queries], np.int64),
-                "cnt": np.zeros(len(queries), np.int64),
-                "first_pos": pd.array([None] * len(queries), dtype="Int64"),
+                "query_id": np.array(query_ids, np.int64),
+                "cnt": np.zeros(len(query_ids), np.int64),
             }
         ),
-        QUERY_HITS_SCHEMA,
-    )  # pandas input -> local relation (a list parallelizes into RDD slices)
+        "query_id long, cnt long",
+    ).withColumn("first_pos", F.lit(None).cast("long"))
     return hits.unionByName(baseline).groupBy("query_id").agg(
         F.sum("cnt").alias("count"), F.min("first_pos").alias("first_pos")
     )
@@ -1345,7 +1353,7 @@ def find_training_data(
     per_shard = (
         shards.select("shard_id", "doc_id", "byte_start", "text")
         .groupBy("shard_id")
-        .applyInPandas(kernel, MATCH_LEN_SCHEMA)
+        .applyInPandas(worker_kernel(kernel), MATCH_LEN_SCHEMA)
     )
     return per_shard.groupBy("query_id", "qpos").agg(
         F.max("match_len").alias("match_len")
@@ -1405,7 +1413,7 @@ def find_positions(
     return (
         shards.select("shard_id", "doc_id", "byte_start", "text")
         .groupBy("shard_id")
-        .applyInPandas(kernel, POSITIONS_SCHEMA)
+        .applyInPandas(worker_kernel(kernel), POSITIONS_SCHEMA)
     )
 
 

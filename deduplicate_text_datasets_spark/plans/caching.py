@@ -22,6 +22,10 @@ Without an active scope the behaviour is unchanged (frames stay persisted
 for the session; callers may clearCache() between invocations — bench.py's
 scaling legs do exactly that).
 
+Broadcasts made through ``scoped_broadcast`` are destroyed at scope exit
+the same way. A destroyed broadcast cannot be re-sent, so a frame that
+reads one cannot run after the scope, even by recomputation.
+
 Storage memory at scale: unpersist(blocking=False) only unlinks the
 blocks; executors evict lazily under their normal LRU pressure, so scope
 exit is O(#frames) driver work, never a cluster barrier.
@@ -31,6 +35,7 @@ from __future__ import annotations
 
 import threading
 from contextlib import contextmanager
+from dataclasses import dataclass, field
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
@@ -38,7 +43,13 @@ from pyspark.sql import DataFrame
 _local = threading.local()
 
 
-def _stack() -> list[list[DataFrame]]:
+@dataclass
+class _Scope:
+    frames: list[DataFrame] = field(default_factory=list)
+    broadcasts: list = field(default_factory=list)
+
+
+def _stack() -> list[_Scope]:
     st = getattr(_local, "stack", None)
     if st is None:
         st = []
@@ -55,8 +66,18 @@ def scoped_persist(
     out = df.persist(level)
     st = _stack()
     if st:
-        st[-1].append(out)
+        st[-1].frames.append(out)
     return out
+
+
+def scoped_broadcast(sc, value):
+    """sc.broadcast(value); if a cache_scope is active on this thread, the
+    broadcast is destroyed at scope exit."""
+    bc = sc.broadcast(value)
+    st = _stack()
+    if st:
+        st[-1].broadcasts.append(bc)
+    return bc
 
 
 def probe_rows(df: DataFrame, guard: int):
@@ -66,9 +87,13 @@ def probe_rows(df: DataFrame, guard: int):
 
     Replaces the limit(guard+1).toPandas() probe pattern (round-6): under
     AQE, CollectLimit's incremental execution turned each probe into a
-    3-4 job escalation ladder (scan 1 partition, then 4x more per retry —
-    measured as a chain of ~0.4 s jobs per probe at bench scale). A plain
-    toPandas is ONE job; ``spark.driver.maxResultSize`` (default 1 GiB)
+    3-4 job escalation ladder (scan 1 partition, then 4x more per retry),
+    measured at ~0.4 s per job. Each ladder job re-runs the probed
+    frame's lineage, and where that holds a Python kernel most of the
+    0.4 s was the per-task worker floor (the zip re-read that the
+    package's ``_tune_zipimport`` now skips), not the collect itself.
+    Fewer jobs still win. A plain toPandas is ONE job;
+    ``spark.driver.maxResultSize`` (default 1 GiB)
     is the hard backstop for the over-guard case — a frame too big to
     ship aborts the collect with the documented error, which is caught
     and treated as "over guard" (the caller's distributed plan runs; one
@@ -96,14 +121,19 @@ def cache_scope():
     was persisted. Yields the (mutable) list of registered frames, mostly
     useful for tests/observability.
     """
-    frames: list[DataFrame] = []
-    _stack().append(frames)
+    scope = _Scope()
+    _stack().append(scope)
     try:
-        yield frames
+        yield scope.frames
     finally:
         _stack().pop()
-        for df in frames:
+        for df in scope.frames:
             try:
                 df.unpersist(blocking=False)
+            except Exception:
+                pass  # session already stopped — nothing to release
+        for bc in scope.broadcasts:
+            try:
+                bc.destroy(blocking=False)
             except Exception:
                 pass  # session already stopped — nothing to release

@@ -18,12 +18,16 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra: dict[str, str] | None = None,
 ) -> SparkSession:
-    # NOTE: Python workers get glibc allocator tuning via the package's
-    # _tune_allocator() (deduplicate_text_datasets_spark/__init__.py) — it
-    # measurably removes the mmap/refault cycle for numpy kernels. Do NOT
-    # export MALLOC_* env to the JVM: forcing the JVM's native mallocs
-    # through the sbrk main arena stalls its many threads on the (host-
-    # serialized) fault path — observed as whole-job hangs.
+    # NOTE: process tunings (glibc allocator, lazy zipimport invalidation;
+    # deduplicate_text_datasets_spark/__init__.py) are installed in any
+    # process that imports the package. A Python worker imports it only
+    # when a kernel makes it: every engine kernel goes through
+    # ``worker_kernel`` for that reason, while a user's own UDF that never
+    # names the package leaves its workers untuned, as does a worker that
+    # cannot import the package (not on its cwd path or --py-files). Do
+    # NOT export MALLOC_* env to the JVM instead: forcing the JVM's native
+    # mallocs through the sbrk main arena stalls its many threads on the
+    # (host-serialized) fault path — observed as whole-job hangs.
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:

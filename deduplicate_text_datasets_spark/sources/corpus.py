@@ -67,9 +67,9 @@ def with_offsets(docs: DataFrame, with_separators: bool = True) -> DataFrame:
     if guard > 0:
         from ..plans.caching import probe_rows
 
-        # count+collect probe: the count prunes every column (parquet row
-        # count / cached batch counts — no text IO), the collect then runs
-        # the narrow (doc_id, doc_len) projection exactly once
+        # single-collect probe (plans.caching.probe_rows): one job pulls
+        # the narrow (doc_id, doc_len) projection and the row guard is
+        # checked on the driver; no count runs first
         probe = probe_rows(lens, guard)
         if probe is not None:
             pdf = probe.sort_values("doc_id", ignore_index=True)

@@ -31,6 +31,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .. import worker_kernel
+
 FIXTURE_SEED = 42
 VOCAB_SIZE = 4096
 EPOCH = datetime(2025, 1, 1, tzinfo=timezone.utc)
@@ -294,7 +296,7 @@ def synth_documents(
 
     return (
         spark.range(0, n, 1, numPartitions=max(1, n // 2000))
-        .mapInPandas(gen, DOCUMENTS_SCHEMA)
+        .mapInPandas(worker_kernel(gen), DOCUMENTS_SCHEMA)
     )
 
 
@@ -353,7 +355,7 @@ def read_sharded_text(
                     {"doc_id": range(lo, hi), "text": [str(t) for t in texts]}
                 )
 
-    raw = shard_df.mapInPandas(load, "doc_id long, text string")
+    raw = shard_df.mapInPandas(worker_kernel(load), "doc_id long, text string")
     return raw.select(
         "doc_id",
         F.concat(F.lit(url_prefix), F.col("doc_id")).alias("url"),

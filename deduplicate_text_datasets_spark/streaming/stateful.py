@@ -41,6 +41,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from .. import worker_kernel
 from ..functions.text import doc_fingerprint
 
 OUTPUT_SCHEMA = StructType(
@@ -111,7 +112,7 @@ def stateful_exact_dedup(
         doc_fingerprint(text_col).alias("fingerprint"),
     )
     return fp.groupBy("fingerprint").applyInPandasWithState(
-        _make_dedup_fn(state_ttl_ms),
+        worker_kernel(_make_dedup_fn(state_ttl_ms)),
         outputStructType=OUTPUT_SCHEMA,
         stateStructType=STATE_SCHEMA,
         outputMode="append",

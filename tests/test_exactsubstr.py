@@ -7,6 +7,8 @@ collect/strike golden parity, count-occurrences overlap semantics.
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pytest
 
@@ -262,3 +264,73 @@ def test_window_hashes_block_invariant():
     ref = window_hashes(buf, L, ROLLHASH_X1, block=len(buf) + 10)
     for blk in (1, 7, 37, 256, 999, 1000):
         assert np.array_equal(window_hashes(buf, L, ROLLHASH_X1, block=blk), ref), blk
+
+
+def test_count_family_arrow_off_parity(spark, docs, fixture_pdf, oracle_corpus):
+    """contains / count_occurrences / count_occurrences_indexed give the
+    same rows with Arrow off: the absent-query baseline must not depend on
+    which createDataFrame path the session takes."""
+    from deduplicate_text_datasets_spark.operators.sa_index import (
+        build_suffix_index,
+        count_occurrences_indexed,
+    )
+    from deduplicate_text_datasets_spark.operators.suffix import contains
+
+    _, corpus, _ = oracle_corpus
+    t0 = fixture_pdf["text"][0]
+    queries = [(0, t0[5:40].encode()), (1, b"zzzz-not-present-zzzz")]
+    index = build_suffix_index(docs, CFG).cache()
+
+    def run():
+        return (
+            sorted(tuple(r) for r in contains(docs, queries, CFG).collect()),
+            sorted(tuple(r) for r in count_occurrences(docs, queries, CFG).collect()),
+            sorted(tuple(r) for r in count_occurrences_indexed(index, queries).collect()),
+        )
+
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    arrow_on = run()
+    spark.conf.set(key, "false")
+    try:
+        arrow_off = run()
+    finally:
+        spark.conf.set(key, "true")
+        index.unpersist()
+    assert arrow_off == arrow_on
+    present, counts, indexed = arrow_on
+    assert present == [(0, True), (1, False)]
+    assert counts == indexed
+    n0 = pyref.count_occurrences(corpus, queries[0][1])
+    assert counts[0][:2] == (0, n0) and counts[0][2] is not None
+    assert counts[1] == (1, 0, None)
+
+
+def test_strike_fast_path_broadcast_released_by_cache_scope(
+    spark, docs, oracle_corpus, monkeypatch
+):
+    """The strike fast path's span broadcast lives until the caller's
+    cache_scope exits, then is destroyed."""
+    from deduplicate_text_datasets_spark.plans import caching
+
+    made = []
+    scoped_broadcast = caching.scoped_broadcast
+
+    def spy(sc, value):
+        made.append(scoped_broadcast(sc, value))
+        return made[-1]
+
+    monkeypatch.setattr(caching, "scoped_broadcast", spy)
+    texts, corpus, sizes = oracle_corpus
+    ranges = pyref.collect_ranges(
+        pyref.self_similar_positions(corpus, CFG.length_threshold),
+        CFG.length_threshold,
+    )
+    expected = pyref.apply_removals(texts, sizes, ranges, with_separators=True)
+    with caching.cache_scope():
+        remove = coalesce_positions(self_similar(docs, CFG), CFG.length_threshold)
+        out = apply_removals(docs, remove, CFG).collect()
+        assert len(made) == 1, "the strike fast path must have run"
+        assert os.path.exists(made[0]._path)
+    assert not os.path.exists(made[0]._path), "scope exit must destroy it"
+    got = {r["doc_id"]: bytes(r["deduped"]) for r in out}
+    assert got == dict(enumerate(expected))

@@ -62,6 +62,17 @@ def test_cosine_topk_exact(spark, emb):
         assert ranked == expect, f"query {q}"
 
 
+def test_cosine_topk_empty_queries(spark, emb):
+    """An empty query set yields no rows instead of failing in the kernel."""
+    df, _ = emb
+    queries = df.filter(F.col("vec_id") < 0).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    got = cosine_topk(df, queries, k=5)
+    assert got.columns == ["query_id", "rank", "neighbor_id", "cosine"]
+    assert got.collect() == []
+
+
 def test_cosine_topk_lsh_recall(spark, emb):
     """Random-hyperplane LSH must recover truly-similar neighbors (the
     agreement probability per bit is 1-θ/π, ≈0.99 at cosine 0.999); random

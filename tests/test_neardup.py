@@ -200,3 +200,22 @@ def test_neardup_clusters_flagship(spark, docs, fixture_pdf, oracle_pairs):
     for (a, b), j in oracle_pairs.items():
         if j >= cfg.minhash.jaccard_threshold:
             assert by_id[a]["cluster_id"] == by_id[b]["cluster_id"]
+
+
+def test_candidate_pairs_pair_cap_keeps_one_cached_copy(spark, monkeypatch):
+    """Above the driver pair cap the distributed plan runs from a
+    copartitioned cached copy; the probe-time copy is released, so the
+    bucket frame is not cached twice."""
+    from deduplicate_text_datasets_spark.operators.minhash import candidate_pairs
+    from deduplicate_text_datasets_spark.plans.caching import cache_scope
+
+    rows = [(int(m), 0, 1) for m in range(20)]  # one bucket of 20 docs
+    buckets = spark.createDataFrame(rows, "doc_id long, band int, bucket long")
+    monkeypatch.setenv("SPARK_GRAFT_LSH_DRIVER_PAIR_MAX", "10")  # < C(20,2)
+    with cache_scope() as frames:
+        pairs = candidate_pairs(buckets, MinHashConfig())
+        probe_copy, copartitioned = frames[0], frames[1]
+        assert not probe_copy.storageLevel.useMemory
+        assert copartitioned.storageLevel.useMemory
+        got = sorted((r["a"], r["b"]) for r in pairs.collect())
+    assert got == sorted(itertools.combinations(range(20), 2))
